@@ -1,7 +1,12 @@
 .PHONY: test dist bench validate scaling
 
+# the Tier-1 command (ROADMAP.md): no -x, so one known failure does not hide
+# the rest of the suite
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 python -m pytest tests/ -q \
+		--continue-on-collection-errors -p no:cacheprovider
 
 dist:
 	mkdir -p dist

@@ -12,6 +12,12 @@ Cluster usage:
         --input  <pages parquet/Iceberg path> \\
         --output <results path> --lineage <lineage path> [--no-normalize]
 
+A run is one scan of the input feeding one Python stage and the commit.
+Pages that cannot be extracted (null or oversized html) are counted by an
+``Observation`` inside that same write job and, with ``--quarantine``,
+written to the quarantine table only after the commit, and only when
+there are any. Quarantine rows from earlier runs are not appended again.
+
 Sandbox usage (synthesizes pages from the testdata documents table):
 
     python jobs/extract.py --synthesize /root/testdata/sf0.001 \\
@@ -60,12 +66,19 @@ def main(argv=None):
     if args.incremental and not args.input:
         p.error("--incremental requires --input (a pages directory)")
 
-    from norsk_historisk_avis_ocr_spark.operators.extract import split_quarantine
-    from norsk_historisk_avis_ocr_spark.operators.resume import run_with_resume
+    from norsk_historisk_avis_ocr_spark.operators.extract import (
+        quarantine_reason, split_quarantine,
+    )
+    from norsk_historisk_avis_ocr_spark.operators.resume import (
+        resume_filter, run_with_resume,
+    )
     from norsk_historisk_avis_ocr_spark.plans import build_session
-    from norsk_historisk_avis_ocr_spark.sources import pages_df
+    from norsk_historisk_avis_ocr_spark.sources import (
+        pages_df, read_done_urls,
+    )
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
     owns_session = SparkSession.getActiveSession() is None
     spark = build_session("nhao-extract", master=args.master)
     try:
@@ -86,11 +99,11 @@ def main(argv=None):
         else:
             pages = spark.read.parquet(args.input)
 
+        observed = pages
         if args.quarantine:
-            good, bad = split_quarantine(pages)
-            if bad.limit(1).count():
-                bad.write.mode("append").parquet(args.quarantine)
-            pages = good
+            quarantine = Observation("quarantine")
+            observed = pages.observe(
+                quarantine, F.count(quarantine_reason()).alias("n"))
 
         out_path = args.output
         if args.engine:
@@ -101,9 +114,15 @@ def main(argv=None):
         else:
             kwargs = {"normalize": not args.no_normalize}
         n = run_with_resume(
-            spark, pages, out_path, lineage_path=args.lineage,
+            spark, observed, out_path, lineage_path=args.lineage,
             extract_kwargs=kwargs)
         print(f"committed {n} new documents to {out_path}")
+        # the write above ran the observed plan, so get cannot block
+        if args.quarantine and quarantine.get["n"]:
+            _good, bad = split_quarantine(pages)
+            seen = read_done_urls(spark, args.quarantine)
+            resume_filter(bad, seen).write.mode("append") \
+                .parquet(args.quarantine)
     finally:
         if owns_session:  # never stop a session we merely joined
             spark.stop()

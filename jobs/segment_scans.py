@@ -82,8 +82,8 @@ def main(argv=None):
 
         n = run_with_resume(
             spark, scans, args.output, lineage_path=args.lineage,
-            transform=lambda df: segment_image_pages(
-                df, debug_overlay=args.debug_overlay),
+            transform=lambda df, acc: segment_image_pages(
+                df, debug_overlay=args.debug_overlay, lineage_acc=acc),
             key_col="page_id")
         print(f"committed {n} geometry rows to {args.output}")
         return n

@@ -4,8 +4,9 @@ Spark-first design notes (scale target: 10^12 rows / 100 TB):
 
 - **Map-only.** The whole pipeline is one ``mapInPandas`` stage — no shuffle
   in the hot path. The only shuffles in a production run are the resume
-  anti-join (broadcast when the done-set is small; AQE otherwise) and the
-  optional size-decorrelating repartition below.
+  anti-join of a resumed run (broadcast when the done-set is small; AQE
+  otherwise; a first run's empty done-set folds away) and the optional
+  size-decorrelating repartition below.
 - **Skew.** Input files are often clustered by crawl host/time, so byte
   sizes correlate within input splits; ``decorrelate=True`` repartitions by
   ``xxhash64(url)`` to spread heavy pages uniformly — the analog of the
@@ -24,26 +25,33 @@ Spark-first design notes (scale target: 10^12 rows / 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.udfs import RESULT_SCHEMA, extract_map_fn
 from ..stages.normalize import default_normalizer
+from .resume import lineage_tap
 
 # Pages above this are quarantined, mirroring the reference's hard 5 MB
 # decoded-image budget (``claude_vision_engine.py:92-95``) scaled to html.
 MAX_HTML_BYTES = 16 * 1024 * 1024
 
 
+def quarantine_reason(max_bytes: int = MAX_HTML_BYTES) -> Column:
+    """Why a page is quarantined (``null_html`` / ``oversized_html``), or
+    null for a page the extraction takes."""
+    return (
+        F.when(F.col("html").isNull(), F.lit("null_html"))
+        .when(F.length("html") > max_bytes, F.lit("oversized_html"))
+    )
+
+
 def split_quarantine(pages: DataFrame,
                      max_bytes: int = MAX_HTML_BYTES) -> tuple[DataFrame, DataFrame]:
     """(good, quarantined). Quarantined rows keep url + reason for the
     errors table (S5 in SURVEY.md §2.1)."""
-    reason = (
-        F.when(F.col("html").isNull(), F.lit("null_html"))
-        .when(F.length("html") > max_bytes, F.lit("oversized_html"))
-    )
-    with_reason = pages.withColumn("quarantine_reason", reason)
+    with_reason = pages.withColumn("quarantine_reason",
+                                   quarantine_reason(max_bytes))
     good = with_reason.filter(F.col("quarantine_reason").isNull()) \
                       .drop("quarantine_reason")
     bad = with_reason.filter(F.col("quarantine_reason").isNotNull()) \
@@ -158,7 +166,8 @@ def extract_pages(pages: DataFrame, normalize: bool = True,
                   num_partitions: int | None = None,
                   output_columns: list[str] | None = None,
                   normalize_langs: set[str] | None = None,
-                  normalize_tables: dict | None = None) -> DataFrame:
+                  normalize_tables: dict | None = None,
+                  lineage_acc=None) -> DataFrame:
     """Run the full extraction over a pages DataFrame → RESULT_SCHEMA rows.
 
     ``output_columns``: project inside the UDF (Catalyst cannot prune
@@ -173,6 +182,10 @@ def extract_pages(pages: DataFrame, normalize: bool = True,
     ``OrthographyNormalizer`` or its ``to_table()`` form; each row is
     normalized with its language's trie, rows with no table are left
     unnormalized. Overrides ``normalize``/``normalize_langs``.
+
+    ``lineage_acc``: a ``_LineageAccParam`` accumulator the extraction
+    stage feeds per output batch (``lineage_tap``) — the job path's commit
+    stats, with no second Python stage.
     """
     from ..functions.udfs import projected_schema
     from ..stages.normalize import OrthographyNormalizer
@@ -198,5 +211,6 @@ def extract_pages(pages: DataFrame, normalize: bool = True,
     table = (default_normalizer().to_table()
              if normalize and normalize_tables is None else None)
     return df.mapInPandas(
-        extract_map_fn(table, output_columns, normalize_langs, lang_tables),
+        lineage_tap(extract_map_fn(table, output_columns, normalize_langs,
+                                   lang_tables), lineage_acc),
         schema=projected_schema(output_columns))

@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .resume import lineage_tap
+
 BOX_TYPE = StructType([
     StructField("x0", IntegerType(), False),
     StructField("y0", IntegerType(), False),
@@ -143,7 +145,8 @@ def render_debug_overlay(gray, geo) -> bytes:
 
 def segment_image_pages(df: DataFrame, id_col: str = "page_id",
                         png_col: str = "png",
-                        debug_overlay: bool = False) -> DataFrame:
+                        debug_overlay: bool = False,
+                        lineage_acc=None) -> DataFrame:
     """Encoded page payloads (PNG, baseline JPEG, or baseline TIFF —
     dispatched on magic bytes) → layout geometry rows (the reference's
     input class: encoded raster in, geometry out,
@@ -161,6 +164,9 @@ def segment_image_pages(df: DataFrame, id_col: str = "page_id",
     (:func:`render_debug_overlay`) — the reference's S8 debug artifacts as
     a queryable column. Costs one PNG encode per page; leave off in
     production scans.
+
+    ``lineage_acc``: the resume job's lineage accumulator, fed per output
+    batch from inside this stage (``operators/resume.py:lineage_tap``).
     """
     schema = StructType(
         [LAYOUT_SCHEMA[0]]
@@ -209,7 +215,7 @@ def segment_image_pages(df: DataFrame, id_col: str = "page_id",
                     rows.append(row)
             yield pd.DataFrame(rows)
 
-    return df.mapInPandas(fn, schema=schema)
+    return df.mapInPandas(lineage_tap(fn, lineage_acc), schema=schema)
 
 
 # Historical name (round 2): the operator now also decodes baseline JPEG.

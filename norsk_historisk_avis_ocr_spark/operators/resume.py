@@ -6,7 +6,13 @@ The reference resumes by probing for ``combined.txt`` per file
 relational operator here. The done-set is usually much smaller than the
 input on a resumed run's *remaining* work, but can be huge in absolute
 terms; the join therefore stays a shuffle join unless the caller knows the
-done-set is small and asks for a broadcast.
+done-set is small and asks for a broadcast. On a first run the done-set is
+an empty relation Catalyst can prove empty (``read_done_urls``), so the
+join and its shuffle are optimized away.
+
+Lineage rides the map stage: the one ``mapInPandas`` stage that produces
+the results feeds a dict accumulator batch by batch (``lineage_tap``), so
+a job run is one scan of the input, one Python stage and the commit.
 """
 
 from __future__ import annotations
@@ -49,54 +55,58 @@ LINEAGE_SCHEMA = ("partition_id long, n_urls long, bytes_in long, "
                   "n_blocks long, n_mastheads long")
 
 
-def with_lineage_stats(results: DataFrame, acc) -> DataFrame:
-    """Pass-through stage that accumulates per-partition lineage stats
-    while the batch streams to the sink — commit-stats in ONE scan (the
-    round-2 shape persisted the batch DISK_ONLY and read it three times).
+def lineage_tap(map_fn, acc):
+    """``map_fn`` (a ``mapInPandas`` function) with every batch it yields
+    counted into the lineage accumulator ``acc`` as ``{partition_id:
+    [n_urls, bytes_in, n_blocks, n_mastheads]}`` — inside the same Python
+    stage, so lineage costs no second pass over the results. Batches
+    without a ``metrics`` column (projected output, raster geometry) count
+    rows only. ``acc=None`` returns ``map_fn`` unchanged.
 
     Accumulator exactly-once caveat: Spark applies accumulator updates from
     *successful result-stage tasks* exactly once, and a sink write is a
     result stage (each task commits), so retried/speculative tasks don't
     double-count. Updates from re-run shuffle-stage tasks can double-count
-    — don't put a shuffle between this stage and the write."""
-    has_metrics = "metrics" in results.columns
+    — don't put a shuffle between the tapped stage and the write."""
+    if acc is None:
+        return map_fn
 
     def fn(batches):
         from pyspark import TaskContext
         pid = TaskContext.get().partitionId()
-        for pdf in batches:
+        for pdf in map_fn(batches):
             n = len(pdf)
             if n:
-                if has_metrics:
+                if "metrics" in pdf:
                     ms = pdf["metrics"]
                     stats = [n, int(sum(m["html_bytes"] for m in ms)),
                              int(sum(m["n_blocks"] for m in ms)),
                              int(sum(1 for m in ms if m["has_masthead"]))]
-                else:  # projected output: row counts only
+                else:
                     stats = [n, 0, 0, 0]
                 acc.add({pid: stats})
             yield pdf
 
-    return results.mapInPandas(fn, schema=results.schema)
+    return fn
+
+
+def _passthrough(batches):
+    yield from batches
+
+
+def with_lineage_stats(results: DataFrame, acc) -> DataFrame:
+    """A separate pass-through stage that feeds ``acc`` like
+    :func:`lineage_tap` — for results built without the tap. Job paths
+    pass the accumulator to the producing stage instead, which saves this
+    stage's second Arrow round trip of every result row."""
+    return results.mapInPandas(lineage_tap(_passthrough, acc),
+                               schema=results.schema)
 
 
 def lineage_rows_from_stats(spark: SparkSession, stats: dict) -> DataFrame:
     return spark.createDataFrame(
         [(int(pid), *(int(x) for x in v)) for pid, v in sorted(stats.items())],
         LINEAGE_SCHEMA)
-
-
-def partition_lineage(results: DataFrame) -> DataFrame:
-    """Per-partition lineage + metrics rows (north rule): one row per task
-    partition with url count, bytes in, and block totals — appended to the
-    lineage table at commit so a killed run can be audited and resumed."""
-    return results.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("n_urls"),
-        F.sum("metrics.html_bytes").alias("bytes_in"),
-        F.sum("metrics.n_blocks").alias("n_blocks"),
-        F.sum(F.when(F.col("metrics.has_masthead"), 1).otherwise(0))
-         .alias("n_mastheads"),
-    )
 
 
 def run_with_resume_bucketed(spark: SparkSession, pages_table: str,
@@ -121,14 +131,14 @@ def run_with_resume_bucketed(spark: SparkSession, pages_table: str,
     pages = spark.table(pages_table)
     if spark.catalog.tableExists(results_table):
         done = spark.table(results_table).select("url")
-    else:
-        done = spark.createDataFrame([], "url string")
+    else:  # provably empty: Catalyst drops the anti-join (read_done_urls)
+        done = spark.createDataFrame([], "url string").limit(0)
     todo = resume_filter(pages, done)
     good, _bad = split_quarantine(todo)
-    results = extract_pages(good, **(extract_kwargs or {}))
-    # commit stats ride an accumulator on the write pass: ONE scan total
+    # commit stats ride an accumulator in the extraction stage: ONE scan
     acc = spark.sparkContext.accumulator({}, _LineageAccParam())
-    with_lineage_stats(results, acc).write.mode("append") \
+    results = extract_pages(good, lineage_acc=acc, **(extract_kwargs or {}))
+    results.write.mode("append") \
         .bucketBy(n_buckets, "url").sortBy("url") \
         .format("parquet").saveAsTable(results_table)
     return sum(v[0] for v in acc.value.values())
@@ -140,9 +150,12 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
                     transform=None, key_col: str = "url") -> int:
     """One resumable batch: anti-join done keys, process, commit, lineage.
 
-    ``transform`` is the batch pipeline (DataFrame → DataFrame); the
-    default is the html extraction path (quarantine split +
-    ``extract_pages``). Pass e.g. ``segment_image_pages`` with
+    ``transform(todo, acc)`` is the batch pipeline (DataFrame →
+    DataFrame); it must pass the lineage accumulator ``acc`` to the Python
+    stage that produces its output (``lineage_tap``), or lineage and the
+    returned count stay 0. The default is the html extraction path
+    (quarantine split + ``extract_pages``). Pass e.g.
+    ``lambda df, acc: segment_image_pages(df, lineage_acc=acc)`` with
     ``key_col="page_id"`` for a resumable raster-geometry backfill — the
     resume/commit/lineage machinery is payload-agnostic as long as the
     output carries ``key_col``.
@@ -152,9 +165,12 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
     with Iceberg this is a snapshot append).
 
     Commit-stats lineage: the per-partition counts/bytes/blocks ride a dict
-    accumulator on the write pass itself (``with_lineage_stats``), so the
-    batch is extracted and scanned exactly ONCE — no persist, no re-read of
-    the batch, and the committed output table is never re-read either. The
+    accumulator fed from inside the one Python stage that produces the
+    results (``lineage_tap``), so the batch is scanned and extracted
+    exactly ONCE and crosses the Arrow boundary once each way — no persist,
+    no second pass-through stage, and the committed output table is never
+    re-read either. On a first run the empty done-set folds away, so the
+    plan is scan → Python stage → write with no shuffle. The
     lineage rows (one per task partition, tiny) are created driver-side
     from the accumulator AFTER the commit succeeds, so a killed run never
     records lineage for an uncommitted batch.
@@ -163,14 +179,15 @@ def run_with_resume(spark: SparkSession, pages: DataFrame, out_path: str,
 
     done = read_done_urls(spark, out_path, key_col=key_col)
     todo = resume_filter(pages, done, key_col=key_col)
+    acc = spark.sparkContext.accumulator({}, _LineageAccParam())
     if transform is None:
         from .extract import extract_pages, split_quarantine
-        good, bad = split_quarantine(todo)
-        results = extract_pages(good, **(extract_kwargs or {}))
+        good, _bad = split_quarantine(todo)
+        results = extract_pages(good, lineage_acc=acc,
+                                **(extract_kwargs or {}))
     else:
-        results = transform(todo)
-    acc = spark.sparkContext.accumulator({}, _LineageAccParam())
-    write_results(with_lineage_stats(results, acc), out_path)
+        results = transform(todo, acc)
+    write_results(results, out_path)
     stats = acc.value
     n = sum(v[0] for v in stats.values())
     if n and lineage_path:

@@ -37,11 +37,16 @@ def write_results(df: DataFrame, path: str, mode: str = "append") -> None:
 
 def read_done_urls(spark: SparkSession, path: str,
                    key_col: str = "url") -> DataFrame:
-    """Keys already committed to the results sink (empty if first run)."""
+    """Keys already committed to the results sink (empty if first run).
+
+    The empty done-set is a relation Catalyst can prove empty (``LIMIT
+    0``; a bare ``createDataFrame([])`` is an opaque RDD scan), so on a
+    first run the optimizer removes the resume anti-join and both of its
+    shuffles instead of shuffling the whole input against nothing."""
     if os.path.isdir(path) and any(
             f.endswith(".parquet") for f in os.listdir(path)):
         return spark.read.parquet(path).select(key_col)
-    return spark.createDataFrame([], f"{key_col} string")
+    return spark.createDataFrame([], f"{key_col} string").limit(0)
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str = "url",

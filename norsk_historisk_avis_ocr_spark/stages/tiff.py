@@ -313,7 +313,14 @@ def _bit_windows(data: bytes) -> list[int]:
     cost). Past-end bits read as zeros — same semantics as the old
     zero-padded copy; loudness is preserved because no T.4/mode code is
     all-zero and the top-level decoders check the final consumed
-    position against the real bit length."""
+    position against the real bit length.
+
+    The pad covers every reachable peek: a peek at or past bit ``nbits``
+    reads only zeros and raises, so every decoded code starts before
+    ``nbits``, and codes are at most 13 bits long; the farthest peek, at
+    bit ``nbits + 12``, reads window ``n + 1``, the last one. MH row
+    alignment cannot pass ``nbits`` either: a row ends on a terminating
+    code, which is checked against ``nbits``."""
     d = np.frombuffer(data + b"\x00" * 4, dtype=np.uint8).astype(np.uint32)
     return ((d[:-2] << 8 | d[1:-1]) << 8 | d[2:]).tolist()
 

@@ -421,16 +421,13 @@ def test_g4_corrupt_is_loud():
                                       compression=4))
 
 
-def test_mh_rle_bilevel_roundtrip():
-    """CCITT Modified Huffman (Compression=2): byte-aligned 1-D rows of
-    alternating white/black runs, same T.4 tables as G4."""
+def _mh_encode(img01: np.ndarray) -> bytes:
+    """CCITT Modified Huffman bitstream of a 0/1 image: byte-aligned 1-D
+    rows of alternating white/black runs, same T.4 tables as G4."""
     from norsk_historisk_avis_ocr_spark.stages.tiff import (
         _BLACK_MAKEUP, _BLACK_TERM, _EXT_MAKEUP, _WHITE_MAKEUP, _WHITE_TERM,
     )
-    rng = np.random.default_rng(4)
-    img01 = rng.integers(0, 2, size=(7, 90)).astype(np.uint8)
-    img01[3] = 0            # all-white row (single 90 run)
-    img01[4] = 1            # all-black row (0-white then 90-black)
+    w = img01.shape[1]
     bits = []
 
     def emit(run, term, makeup):
@@ -446,9 +443,9 @@ def test_mh_rle_bilevel_roundtrip():
         n = sum(len(b) for b in bits)
         bits.append("0" * ((-n) % 8))
         x, color = 0, 0
-        while x < 90:
+        while x < w:
             run = 0
-            while x + run < 90 and row[x + run] == color:
+            while x + run < w and row[x + run] == color:
                 run += 1
             emit(run, _WHITE_TERM if color == 0 else _BLACK_TERM,
                  _WHITE_MAKEUP if color == 0 else _BLACK_MAKEUP)
@@ -456,7 +453,17 @@ def test_mh_rle_bilevel_roundtrip():
             color ^= 1
     s = "".join(bits)
     s += "0" * ((-len(s)) % 8)
-    payload = bytes(int(s[i:i + 8], 2) for i in range(0, len(s), 8))
+    return bytes(int(s[i:i + 8], 2) for i in range(0, len(s), 8))
+
+
+def test_mh_rle_bilevel_roundtrip():
+    """CCITT Modified Huffman (Compression=2): byte-aligned 1-D rows of
+    alternating white/black runs, same T.4 tables as G4."""
+    rng = np.random.default_rng(4)
+    img01 = rng.integers(0, 2, size=(7, 90)).astype(np.uint8)
+    img01[3] = 0            # all-white row (single 90 run)
+    img01[4] = 1            # all-black row (0-white then 90-black)
+    payload = _mh_encode(img01)
     data = _simple_tiff(payload, 90, 7, bits=1, compression=2,
                         photometric=0)
     assert (decode_tiff_gray(data) == (1 - img01) * 255).all()
@@ -759,11 +766,24 @@ def test_tiff_quarantine_contract_under_corruption():
     )
     pages = [_gradient(10 + k, 20) for k in range(3)]
     g4img = (_gradient(12, 40) < 128).astype(np.uint8)
+    # MH, the byte-aligned 1-D leg: runs of 130 white and 80 black take
+    # makeup codes
+    mhimg = np.zeros((6, 130), dtype=np.uint8)
+    mhimg[1:5, 20:100] = 1
+    mh = _mh_encode(mhimg)
     bases = [
         encode_tiff_multi(pages),
         _simple_tiff(encode_ccitt_g4(g4img), 40, 12, bits=1,
                      compression=4, photometric=0),
+        _simple_tiff(mh, 130, 6, bits=1, compression=2, photometric=0),
     ]
+    # every truncation of the MH strip: row alignment puts peeks at and
+    # past the end of the data, which must read as zeros
+    for k in range(len(mh)):
+        with pytest.raises(ValueError):
+            for _idx, arr in decode_tiff_pages(_simple_tiff(
+                    mh[:k], 130, 6, bits=1, compression=2, photometric=0)):
+                pass
 
     @settings(max_examples=120, deadline=None)
     @given(base=st.integers(0, len(bases) - 1),
