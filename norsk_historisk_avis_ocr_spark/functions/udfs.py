@@ -146,11 +146,10 @@ def projected_schema(output_columns: list[str] | None) -> StructType:
 
 def extract_map_fn(normalize_table: tuple[dict, set] | None,
                    output_columns: list[str] | None = None,
-                   normalize_langs: set[str] | None = None,
                    lang_tables: dict[str, tuple[dict, set]] | None = None):
     """Build the ``mapInPandas`` function. ``normalize_table`` is the
     broadcast-safe plain-dict form of the trie (rebuilt once per executor —
-    the J3 broadcast-lookup pattern).
+    the J3 broadcast-lookup pattern); None = no normalization.
 
     ``output_columns`` pushes projection *into* the UDF: Catalyst cannot
     prune inside a mapInPandas stage, so a downstream ``select`` still pays
@@ -159,9 +158,9 @@ def extract_map_fn(normalize_table: tuple[dict, set] | None,
     quadratic word diff never runs.
 
     ``lang_tables`` selects a *different* orthography table per language
-    code (per-language tries, each built once per executor); rows whose
-    language has no table are not normalized (X5 coalesce). Overrides
-    ``normalize_table``/``normalize_langs``.
+    code (per-language tries, each built once per executor) and needs a
+    ``lang`` column; a row whose language has no table falls back to
+    ``normalize_table`` (X5 coalesce when that is None).
     """
     fields = [f.name for f in projected_schema(output_columns).fields]
     need_diff = "correction_changes" in fields
@@ -169,40 +168,26 @@ def extract_map_fn(normalize_table: tuple[dict, set] | None,
 
     def fn(batches):
         import pandas as pd
-        if lang_tables is not None:
-            per_lang = {lg: OrthographyNormalizer(t[0], t[1])
-                        for lg, t in lang_tables.items()}
-            pick = per_lang.get
-        else:
-            normalizer = (OrthographyNormalizer(normalize_table[0],
-                                                normalize_table[1])
-                          if normalize_table is not None else None)
-            if normalize_langs is not None:
-                def pick(lg):
-                    return normalizer if lg in normalize_langs else None
-            else:
-                def pick(lg):
-                    return normalizer
-        by_lang = lang_tables is not None or normalize_langs is not None
+        default = (OrthographyNormalizer(normalize_table[0],
+                                         normalize_table[1])
+                   if normalize_table is not None else None)
+        tries = {lg: OrthographyNormalizer(t[0], t[1])
+                 for lg, t in (lang_tables or {}).items()}
         for pdf in batches:
-            if by_lang and "lang" not in pdf:
-                # loud, not silent: per-language gating was requested but
-                # the batch carries no language (mirrors extract_pages's
+            if lang_tables is None:
+                langs = [None] * len(pdf)
+            elif "lang" in pdf:
+                langs = pdf["lang"].tolist()
+            else:
+                # loud, not silent: per-language tables were given but the
+                # batch carries no language (mirrors extract_pages's
                 # driver-side ValueError for direct extract_map_fn callers)
                 raise ValueError(
-                    "normalize_langs/lang_tables given but batch has no "
-                    "'lang' column")
-            if by_lang:
-                rows = [extract_one(u, h, pick(lg), with_diff=need_diff,
-                                    wants=wants)
-                        for u, h, lg in zip(pdf["url"].tolist(),
-                                            pdf["html"].tolist(),
-                                            pdf["lang"].tolist())]
-            else:
-                rows = [extract_one(u, h, pick(None), with_diff=need_diff,
-                                    wants=wants)
-                        for u, h in zip(pdf["url"].tolist(),
-                                        pdf["html"].tolist())]
+                    "lang_tables given but batch has no 'lang' column")
+            rows = [extract_one(u, h, tries.get(lg, default),
+                                with_diff=need_diff, wants=wants)
+                    for u, h, lg in zip(pdf["url"].tolist(),
+                                        pdf["html"].tolist(), langs)]
             # column-wise assembly: pd.DataFrame(list-of-dicts) re-infers
             # per row; a dict of per-field lists is one C pass per column
             # (and yields the projected columns only, in declared order)

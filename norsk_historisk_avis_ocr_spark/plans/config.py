@@ -11,16 +11,14 @@ every result row.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
 class EngineConfig:
     """One extraction configuration (≅ one reference engine + kwargs)."""
     normalize: bool = True
-    normalize_langs: frozenset[str] | None = None
     diff_changes: bool = True
-    max_html_bytes: int = 16 * 1024 * 1024
 
     @property
     def name(self) -> str:
@@ -28,21 +26,15 @@ class EngineConfig:
         ``output_dir_name`` (results of different configs never mix)."""
         if not self.normalize:
             return "extract-plain"
-        langs = ("-" + "+".join(sorted(self.normalize_langs))
-                 if self.normalize_langs else "")
         diff = "" if self.diff_changes else "-nodiff"
-        return f"extract-norm{langs}{diff}"
+        return f"extract-norm{diff}"
 
     def extract_kwargs(self) -> dict:
         kw: dict = {"normalize": self.normalize}
-        if self.normalize_langs is not None:
-            kw["normalize_langs"] = set(self.normalize_langs)
         if not self.diff_changes:
-            kw["output_columns"] = [
-                f.name for f in __import__(
-                    "norsk_historisk_avis_ocr_spark.functions.udfs",
-                    fromlist=["RESULT_SCHEMA"]).RESULT_SCHEMA.fields
-                if f.name != "correction_changes"]
+            from ..functions.udfs import RESULT_SCHEMA
+            kw["output_columns"] = [f.name for f in RESULT_SCHEMA.fields
+                                    if f.name != "correction_changes"]
         return kw
 
 

@@ -1,15 +1,12 @@
 """Engine-config parity: the reference's engines as named configs."""
 
-from norsk_historisk_avis_ocr_spark.plans.config import ENGINES, EngineConfig
+from norsk_historisk_avis_ocr_spark.plans.config import ENGINES
 
 
 def test_engine_names_stable():
     assert ENGINES["plain"].name == "extract-plain"
     assert ENGINES["normalized"].name == "extract-norm"
     assert ENGINES["normalized-nodiff"].name == "extract-norm-nodiff"
-    assert EngineConfig(normalize=True,
-                        normalize_langs=frozenset({"no", "da"})).name \
-        == "extract-norm-da+no"
 
 
 def test_engine_kwargs_shape():

@@ -40,7 +40,11 @@ def test_roundtrip_close_at_high_quality():
 def test_decoder_matches_independent_reconstruction():
     """Pin the bitstream path exactly: reconstruct the expected pixels from
     the encoder's own quantized coefficients with a SEPARATE dequant+IDCT
-    written here, and require byte identity with the decoder."""
+    written here, and require byte identity with the decoder.
+
+    The coefficients are derived with the encoder's exact arithmetic (the
+    batched matmul): an einsum forward DCT differs in the last bits, and a
+    coefficient/q that lands on a .5 tie then rounds the other way."""
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, size=(24, 40), dtype=np.int32).astype(np.uint8)
     quality = 85
@@ -51,7 +55,7 @@ def test_decoder_matches_independent_reconstruction():
     h, w = img.shape
     blocks = img.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3) \
         .reshape(-1, 8, 8).astype(np.float64) - 128.0
-    coefs = np.einsum("ik,nkl,jl->nij", _DCT, blocks, _DCT)
+    coefs = _DCT @ blocks @ _DCT.T
     qc = np.round(coefs / q).astype(np.int64)
     spatial = np.einsum("ki,nkl,lj->nij", _DCT, (qc * q).astype(np.float64),
                         _DCT)

@@ -43,13 +43,15 @@ def test_pipeline_byte_identical_per_url(spark, sf_dir, documents_rows,
 
 def test_spans_index_into_combined(spark, sf_dir):
     rows = extract_pages(pages_df(spark, sf_dir)) \
-        .select("url", "combined", "spans", "header").limit(50).collect()
+        .select("url", "combined", "spans", "header", "columns") \
+        .limit(50).collect()
     for r in rows:
         data = r.combined.encode("utf-8")
         labels = [s.section for s in r.spans]
-        assert labels == sorted(labels, key=lambda x: (x != "header",)) or True
+        # reading order: header (when present), then columns left→right
+        assert labels == (["header"] if r.header is not None else []) + \
+            [f"column-{i}" for i in range(1, len(r.columns) + 1)]
         if r.header is not None:
-            assert labels[0] == "header"
             assert data[r.spans[0].start:r.spans[0].end].decode("utf-8") == r.header
 
 
@@ -95,12 +97,6 @@ def test_run_with_resume_idempotent(spark, sf_dir, tmp_path):
     lin = spark.read.parquet(lineage)
     assert lin.agg(F.sum("n_urls")).first()[0] == 25
     pages.unpersist()
-
-
-def test_extract_decorrelate_plan_is_single_shuffle(spark, sf_dir):
-    df = extract_pages(pages_df(spark, sf_dir), decorrelate=True)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.lower().count("exchange") <= 1
 
 
 def test_final_column_coalesce(spark, sf_dir):
@@ -171,8 +167,9 @@ def test_normalize_langs_gating(spark):
         [("u-no", bytearray(html_no), "no"),
          ("u-sv", bytearray(html_no), "sv")],
         "url string, html binary, lang string")
-    rows = {r.url: r for r in
-            extract_pages(df, normalize_langs={"no", "da"}).collect()}
+    rows = {r.url: r for r in extract_pages(
+        df, normalize={lg: default_normalizer() for lg in ("no", "da")}
+    ).collect()}
     assert rows["u-no"].normalized.startswith("det mann har")
     assert rows["u-no"].final == rows["u-no"].normalized
     assert rows["u-sv"].normalized is None
@@ -223,12 +220,16 @@ def test_normalize_tables_per_language(spark):
         [("u-no", bytearray(html), "no"), ("u-sv", bytearray(html), "sv"),
          ("u-en", bytearray(html), "en")],
         "url string, html binary, lang string")
-    rows = {r.url: r for r in extract_pages(
-        df, normalize_tables={"no": no_table, "sv": sv_table}).collect()}
+    res = extract_pages(df, normalize={"no": no_table, "sv": sv_table})
+    rows = {r.url: r for r in res.collect()}
     assert rows["u-no"].normalized.startswith("mann det")
     assert rows["u-sv"].normalized.startswith("man clet")
     assert rows["u-en"].normalized is None          # no table → X5 coalesce
     assert rows["u-en"].final == rows["u-en"].transcribed
+    # one Python stage for every language, no shuffle
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_normalize_langs_requires_lang_column(spark):
@@ -236,7 +237,7 @@ def test_normalize_langs_requires_lang_column(spark):
     df = spark.createDataFrame(
         [("u", bytearray(b"<html></html>"))], "url string, html binary")
     with _pytest.raises(ValueError, match="no 'lang' column"):
-        extract_pages(df, normalize_langs={"no"})
+        extract_pages(df, normalize={"no": default_normalizer()})
 
 
 def test_read_done_urls_edge_cases(spark, tmp_path):

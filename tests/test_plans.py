@@ -88,6 +88,10 @@ def test_size_bucketed_repartition_plan(spark, pages_parquet):
     # still one shuffle only
     assert plan.count("Exchange") == 1
     assert df.count() == pages.count()
+    # the skew mechanism composes in front of the one extraction stage
+    plan = _plan(extract_pages(df))
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
 
 
 def test_kmeans_assignment_is_shuffle_free(spark, sf_dir):
